@@ -9,8 +9,9 @@ import graft.functions.MathFns
   * once and differentiates it symbolically (`model.py:219-221`); we do
   * the same at the Scala level: the model's per-row log-likelihood and
   * the (param-only) KL term are built as [[Expr]] DAGs on the driver,
-  * compiled once to a flat tape, and evaluated per row inside
-  * `treeAggregate` on executors — the MLlib gradient-descent pattern.
+  * compiled once to a flat tape, and evaluated over blocks of rows per
+  * partition inside `treeAggregate` on executors — the MLlib
+  * gradient-descent pattern.
   *
   * Leaves:
   *  - [[In]]   per-row data value (a DataFrame column)
@@ -19,7 +20,8 @@ import graft.functions.MathFns
   *             fixed within a step, refreshed between steps)
   *
   * The tape is compiled with structural CSE, so repeated sub-expressions
-  * (e.g. a shared `exp(q_sqrt)`) evaluate once per row.
+  * evaluate once per row; the generated block kernel evaluates those
+  * with no [[In]] leaf (e.g. a shared `exp(q_sqrt)`) once per block.
   */
 sealed trait Expr {
   def +(o: Expr): Expr = Add(this, o)
@@ -94,6 +96,14 @@ final class CompiledExpr private (
     * deserialization on executors never recompiles. */
   @transient lazy val fastFn: TapeFn = TapeCodegen.cachedCompile(this)
 
+  /** The execution tier this tape landed on: the single-method block
+    * kernel, the chunked per-row form, or the interpreter (too large,
+    * or code generation failed). */
+  def tier: TapeCodegen.Tier =
+    if (fastFn == null) TapeCodegen.Interpreted
+    else if (ops.length <= TapeCodegen.MaxOps) TapeCodegen.Single
+    else TapeCodegen.Chunked
+
   /** [[eval]] through the generated code when available. */
   def evalFast(in: Array[Double], theta: Array[Double],
                draws: Array[Double], vals: Array[Double]): Double = {
@@ -102,14 +112,27 @@ final class CompiledExpr private (
     else eval(in, theta, draws, vals)
   }
 
-  /** [[evalGrad]] through the generated code when available. */
-  def evalGradFast(in: Array[Double], theta: Array[Double],
-                   draws: Array[Double], vals: Array[Double],
-                   adj: Array[Double], gradTheta: Array[Double],
-                   gradDraws: Array[Double] = null): Double = {
+  /** Σ over rows `from until to` of the root value, adding Σ ∂root/∂θ
+    * into `gradTheta`; row `r` is `rows(r)`, or `rows(idx(r))` when
+    * `idx` is non-null ([[TapeFn.evalGradRows]]). Through the generated
+    * code when available, else a per-row [[evalGrad]] loop over scratch
+    * allocated once per call. */
+  def evalGradRows(rows: Array[Array[Double]], idx: Array[Int], from: Int,
+                   to: Int, theta: Array[Double], draws: Array[Double],
+                   gradTheta: Array[Double]): Double = {
     val f = fastFn
-    if (f != null) f.evalGrad(in, theta, draws, gradTheta, gradDraws)
-    else evalGrad(in, theta, draws, vals, adj, gradTheta, gradDraws)
+    if (f != null) f.evalGradRows(rows, idx, from, to, theta, draws, gradTheta)
+    else {
+      val vals = newValues; val adj = newValues
+      var sum = 0.0
+      var r = from
+      while (r < to) {
+        val in = if (idx == null) rows(r) else rows(idx(r))
+        sum += evalGrad(in, theta, draws, vals, adj, gradTheta)
+        r += 1
+      }
+      sum
+    }
   }
 
   /** Forward pass; returns the root value. */

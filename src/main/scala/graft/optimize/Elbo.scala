@@ -15,13 +15,17 @@ import org.apache.spark.sql.functions.col
   * step draws fresh reparameterization noise, samples a minibatch, and
   * updates the selected parameter collection.
   *
-  * Execution model (SURVEY §4): per-row (logp, ∇logp) evaluate inside
-  * `treeAggregate` against a per-step broadcast θ — partial Breeze-style
-  * accumulators per partition, tree-reduced; the KL term and its
-  * gradient evaluate on the driver (param-sized). This is exactly the
-  * MLlib `LogisticRegression` scaling pattern: no driver-side data, no
-  * shuffle, O(params) driver state — it holds unchanged at 100 TB /
-  * 1000 executors.
+  * Execution model (SURVEY §4): each partition reads its rows in
+  * fixed-size blocks and runs the tape's generated block kernel
+  * ([[graft.autodiff.TapeFn.evalGradRows]]) on each — Σ (logp, ∇logp)
+  * over the block, with the row-invariant θ/draw work done once per
+  * block — into one partial per partition (in-mapper combining); the
+  * partials are tree-reduced by `treeAggregate` against a per-step θ.
+  * The KL term and its gradient evaluate on the driver (param-sized).
+  * This is the MLlib `LogisticRegression` scaling pattern: no
+  * driver-side data, no shuffle, O(params) driver state — it holds
+  * unchanged at 100 TB / 1000 executors. The driver-local path runs
+  * the same kernel over the same fixed-size blocks on a thread pool.
   */
 final class Elbo(
     val module: Module,
@@ -86,6 +90,9 @@ final class Elbo(
 
   private val rowTape: CompiledExpr =
     CompiledExpr.compile(loglik(ctx), inputCols.length, nSlots, nDraws)
+  /** The execution tier of the per-row log-likelihood tape. */
+  def tapeTier: TapeCodegen.Tier = rowTape.tier
+
   private val klTape: CompiledExpr =
     CompiledExpr.compile(Expr.sum(varSeq.map { case (n, v) => ctx.klExpr(v) }),
       0, nSlots, nDraws)
@@ -116,7 +123,7 @@ final class Elbo(
     m
   }
 
-  private def freshDraws(step: Int): Array[Double] = {
+  private[optimize] def freshDraws(step: Int): Array[Double] = {
     // splitmix64 scramble: consecutive-step seeds fed straight into
     // java.util.Random give correlated first draws
     var z = seed + 0x9e3779b97f4a7c15L * (step + 1)
@@ -145,51 +152,49 @@ final class Elbo(
   @transient private lazy val localTest: Array[Array[Double]] =
     dataset.localTest(inputCols)
 
-  /** Driver-local Σ (logp, ∇logp) — multithreaded chunked tape walk. */
+  /** Driver-local Σ (logp, ∇logp): the tape's block kernel over
+    * [[Elbo.BlockRows]]-row blocks, run in parallel, with the block
+    * partials combined in block order — so the sum, to the last bit,
+    * does not depend on how many threads ran it. */
   private def localGrad(rows: Array[Array[Double]], idx: Array[Int],
                         theta: Array[Double], draws: Array[Double])
       : (Double, Array[Double], Long) = {
     val n = if (idx == null) rows.length else idx.length
-    val nThreads = math.min(Runtime.getRuntime.availableProcessors(),
-      math.max(1, n / 2048))
-    val chunk = (n + nThreads - 1) / math.max(1, nThreads)
-    val losses = new Array[Double](nThreads)
-    val grads = Array.fill(nThreads)(new Array[Double](nSlots))
+    val block = Elbo.BlockRows
+    val nBlocks = (n + block - 1) / block
+    val losses = new Array[Double](nBlocks)
+    val grads = new Array[Array[Double]](nBlocks)
     val tape = rowTape
-    java.util.stream.IntStream.range(0, nThreads).parallel().forEach { t =>
-      // per-thread scratch via the same thread-local the distributed
-      // path uses — fresh newValues pairs here were tape-sized garbage
-      // per thread per STEP (unused entirely under Janino codegen)
-      val (vals, adj) = Elbo.scratchFor(tape)
-      val g = grads(t)
-      var l = 0.0
-      var i = t * chunk
-      val end = math.min(n, (t + 1) * chunk)
-      while (i < end) {
-        val row = if (idx == null) rows(i) else rows(idx(i))
-        l += tape.evalGradFast(row, theta, draws, vals, adj, g)
-        i += 1
-      }
-      losses(t) = l
+    java.util.stream.IntStream.range(0, nBlocks).parallel().forEach { b =>
+      val g = new Array[Double](nSlots)
+      losses(b) = tape.evalGradRows(rows, idx, b * block,
+        math.min(n, (b + 1) * block), theta, draws, g)
+      grads(b) = g
     }
+    var loss = 0.0
     val grad = new Array[Double](nSlots)
-    var t = 0
-    while (t < nThreads) {
+    var b = 0
+    while (b < nBlocks) {
+      loss += losses(b)
+      val g = grads(b)
       var i = 0
-      while (i < nSlots) { grad(i) += grads(t)(i); i += 1 }
-      t += 1
+      while (i < nSlots) { grad(i) += g(i); i += 1 }
+      b += 1
     }
-    (losses.sum, grad, n.toLong)
+    (loss, grad, n.toLong)
   }
 
-  /** Distributed Σ over rows of (logp, ∇logp) via treeAggregate — the
-    * MLlib pattern: per-partition partial accumulators against a
-    * per-step broadcast θ, tree-reduced. */
+  /** Distributed Σ over rows of (logp, ∇logp): each partition reads its
+    * rows in [[Elbo.BlockRows]]-row blocks into one buffer and runs the
+    * tape's block kernel on each, summing in block order into one
+    * partial; the per-partition partials are tree-reduced (the MLlib
+    * pattern, against a per-step θ). */
   private def rddGrad(rdd: org.apache.spark.rdd.RDD[Array[Double]],
                       theta: Array[Double], draws: Array[Double])
       : (Double, Array[Double], Long) = {
     val tape = rowTape
     val nS = nSlots
+    val block = Elbo.BlockRows
     val sc = rdd.sparkContext
     // small θ rides in the task closure (one serialization, no
     // broadcast create/destroy round-trip per step); broadcast only
@@ -201,24 +206,31 @@ final class Elbo(
     val cDraws = if (useBroadcast) null else draws
     val depth = math.max(2, (math.log(math.max(rdd.getNumPartitions, 2)) /
       math.log(4)).ceil.toInt)
-    val (loss, grad, cnt) =
-      try rdd.treeAggregate((0.0, new Array[Double](nS), 0L))(
-        seqOp = { case ((l, g, n), in) =>
-          // scratch arrays reused via thread-local: allocation-free over
-          // millions of rows
-          val scratch = Elbo.scratchFor(tape)
-          val th = if (cTheta != null) cTheta else bTheta.value
-          val dr = if (cDraws != null) cDraws else bDraws.value
-          val v = tape.evalGradFast(in, th, dr, scratch._1, scratch._2, g)
-          (l + v, g, n + 1)
-        },
-        combOp = { case ((l1, g1, n1), (l2, g2, n2)) =>
-          var i = 0
-          while (i < nS) { g1(i) += g2(i); i += 1 }
-          (l1 + l2, g1, n1 + n2)
-        }, depth)
-      finally if (useBroadcast) { bTheta.destroy(); bDraws.destroy() }
-    (loss, grad, cnt)
+    val partials = rdd.mapPartitions { it =>
+      val th = if (cTheta != null) cTheta else bTheta.value
+      val dr = if (cDraws != null) cDraws else bDraws.value
+      val buf = new Array[Array[Double]](block)
+      val g = new Array[Double](nS)
+      var l = 0.0
+      var cnt = 0L
+      while (it.hasNext) {
+        var m = 0
+        while (m < block && it.hasNext) { buf(m) = it.next(); m += 1 }
+        l += tape.evalGradRows(buf, null, 0, m, th, dr, g)
+        cnt += m
+      }
+      Iterator.single((l, g, cnt))
+    }
+    val combine = (x: (Double, Array[Double], Long),
+                   y: (Double, Array[Double], Long)) => {
+      val g1 = x._2; val g2 = y._2
+      var i = 0
+      while (i < nS) { g1(i) += g2(i); i += 1 }
+      (x._1 + y._1, g1, x._3 + y._3)
+    }
+    try partials.treeAggregate((0.0, new Array[Double](nS), 0L))(
+      combine, combine, depth)
+    finally if (useBroadcast) { bTheta.destroy(); bDraws.destroy() }
   }
 
   /** Fold the driver-side KL value/gradient into a data-term result:
@@ -242,16 +254,19 @@ final class Elbo(
   /** One batch evaluation, choosing the cheapest valid path:
     * driver-local (tiny data), persisted-vector RDD (no augment), or
     * full DataFrame (augmented). */
-  private def batchGrad(step: Int, minibatchSize: Int, training: Boolean,
+  private[optimize] def batchGrad(step: Int, minibatchSize: Int, training: Boolean,
                         theta: Array[Double], draws: Array[Double])
       : (Double, Array[Double], Long) = {
     if (useLocal) {
       val rows = if (training) localTrain else localTest
       val idx = if (minibatchSize <= 0 || minibatchSize >= rows.length) null
       else {
-        val r = new scala.util.Random(
+        val r = new java.util.SplittableRandom(
           graft.data.DataSet.sampleSeed(seed, step, training))
-        Array.fill(minibatchSize)(r.nextInt(rows.length))
+        val ix = new Array[Int](minibatchSize)
+        var i = 0
+        while (i < minibatchSize) { ix(i) = r.nextInt(rows.length); i += 1 }
+        ix
       }
       localGrad(rows, idx, theta, draws)
     } else if (augmentIsDefault) {
@@ -590,24 +605,16 @@ object Elbo {
     * cached RDD and sub-steps run as jobs. */
   val FusedCollectBudget: Long = 4000000L
 
+  /** Rows per block-kernel call on both gradient paths. Fixed, so the
+    * summation order — and the gradient's last bits — depend on the
+    * data alone, not on the host's core count. */
+  val BlockRows = 4096
+
   /** Default no-op augment marker (identity). Kept as a named object so
     * the engine can detect "no per-step columns" and use the persisted
     * vector / driver-local fast paths. */
   val NoAugment: (org.apache.spark.sql.DataFrame, Int) =>
     org.apache.spark.sql.DataFrame = (df, _) => df
-
-  private val scratch =
-    new ThreadLocal[(Array[Double], Array[Double], CompiledExpr)]()
-
-  private[optimize] def scratchFor(tape: CompiledExpr)
-      : (Array[Double], Array[Double]) = {
-    val cur = scratch.get()
-    if (cur == null || (cur._3 ne tape)) {
-      val fresh = (tape.newValues, tape.newValues, tape)
-      scratch.set(fresh)
-      (fresh._1, fresh._2)
-    } else (cur._1, cur._2)
-  }
 
   /** Model-building context handed to the user's log-likelihood
     * builder — the analog of writing TF ops under `tf_mode`

@@ -356,4 +356,86 @@ class ElboSpec extends AnyFunSuite {
     assert(resumed == uninterrupted,
       s"mid-group resume diverged: $resumed vs $uninterrupted")
   }
+
+  /** y ~ N(a + b·x, exp(c)) over Normal posteriors — the Bayesian
+    * linear regression the benchmark trains. */
+  private def linearElbo(ds: DataSet, localThreshold: Long = 32000000L)
+      : Elbo = {
+    val root = new Module
+    val a = root.add("a", new Variational.Normal(Seq(1)))
+    val b = root.add("b", new Variational.Normal(Seq(1)))
+    val c = root.add("c", new Variational.Normal(Seq(1)))
+    new Elbo(root, ds, Seq("x", "y"), ctx => {
+      val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
+      ExprFns.gaussian(ctx.in("y"), fit,
+        graft.autodiff.Expr.exp(ctx.sample1(c)))
+    }, seed = 3, localThreshold = localThreshold)
+  }
+
+  private def xyData(rows: Int) = spark.range(0, rows, 1, 4)
+    .select(randn(11).as("x"), randn(12).as("y"))
+
+  test("block partials combine in block order: the driver-local " +
+    "gradient is bit-identical on a 1-thread and a 4-thread pool") {
+    val ds = new DataSet(xyData(30000), seed = 0)
+    val elbo = linearElbo(ds)
+    val theta = elbo.thetaFromTree()
+    val draws = elbo.freshDraws(5)
+    def inPool(threads: Int, minibatch: Int) = {
+      val pool = new java.util.concurrent.ForkJoinPool(threads)
+      try pool.submit(new java.util.concurrent.Callable[(Double, Array[Double], Long)] {
+        def call() = elbo.batchGrad(5, minibatch, training = true, theta, draws)
+      }).get()
+      finally pool.shutdown()
+    }
+    Seq(-1, 20000).foreach { mb =>
+      val (l1, g1, n1) = inPool(1, mb)
+      val (l4, g4, n4) = inPool(4, mb)
+      assert(n1 > 4 * Elbo.BlockRows && n1 == n4)
+      assert(java.lang.Double.compare(l1, l4) == 0, s"loss $l1 vs $l4")
+      g1.indices.foreach(k => assert(
+        java.lang.Double.compare(g1(k), g4(k)) == 0, s"grad $k"))
+    }
+    ds.unpersist()
+  }
+
+  test("full-batch run(): the driver-local and the forced-distributed " +
+    "path give the same ELBO") {
+    val ds = new DataSet(xyData(20000), seed = 0)
+    val local = linearElbo(ds).run(step = 4)
+    val dist = linearElbo(ds, localThreshold = 0L).run(step = 4)
+    assert(java.lang.Double.isFinite(local))
+    assert(math.abs(local - dist) <= 1e-9 * math.max(1.0, math.abs(local)),
+      s"local $local vs distributed $dist")
+    ds.unpersist()
+  }
+
+  test("the engine's model tapes compile on the single-method tier: " +
+    "linear regression, RFF regression (D = 16), quality classifier") {
+    val lin = new DataSet(xyData(200), seed = 0)
+    assert(linearElbo(lin).tapeTier == graft.autodiff.TapeCodegen.Single)
+    lin.unpersist()
+
+    val phis = (0 until 16).map(j => s"phi$j")
+    val rff = new DataSet(spark.range(0, 200, 1, 2).select(
+      phis.zipWithIndex.map { case (n, j) => cos(randn(j)).as(n) } :+
+        randn(99).as("y"): _*), seed = 0)
+    val root = new Module
+    val ws = phis.map(n => root.add(s"w_$n", new Variational.Normal(Seq(1))))
+    val rffElbo = new Elbo(root, rff, phis :+ "y", ctx => {
+      val mean = ws.zip(phis).foldLeft(graft.autodiff.Expr.c(0.0)) {
+        case (acc, (w, n)) => acc + ctx.sample1(w) * ctx.in(n)
+      }
+      ExprFns.gaussian(ctx.in("y"), mean, graft.autodiff.Expr.c(0.25))
+    })
+    assert(rffElbo.tapeTier == graft.autodiff.TapeCodegen.Single)
+    rff.unpersist()
+
+    val feats = graft.ops.QualityClassifier.FeatureCols
+    val labeled = spark.range(0, 200, 1, 2).select(
+      feats.zipWithIndex.map { case (n, j) => rand(j).as(n) } :+
+        (rand(7) > 0.5).cast("double").as("label"): _*)
+    val trained = graft.ops.QualityClassifier.train(labeled, maxiter = 1)
+    assert(trained.elbo.tapeTier == graft.autodiff.TapeCodegen.Single)
+  }
 }
